@@ -54,6 +54,45 @@ trait AnnIndex {
   def withParams(p: IndexParams): AnnIndex
 }
 
+/** The inverted-list models (IVFFLAT, IVFPQ, BINARYIVF): a trained coarse
+  * quantizer over lists keyed by `centroid_id`. The incremental indexer
+  * maintains every one of them through this surface alone.
+  */
+trait IvfIndex extends AnnIndex {
+  /** The inverted lists: one row per indexed vector, keyed by `centroid_id`. */
+  def lists: DataFrame
+
+  def ncentroids: Int
+
+  /** List rows are compressed codes, ~4x cheaper to read than the raw
+    * vectors an exact scan reads.
+    */
+  def compressed: Boolean
+
+  /** Per-list row counts (index position = centroid_id), an upper bound
+    * feeding adaptive probe widening; None = fixed nprobe.
+    */
+  def listSizes: Option[Array[Long]]
+
+  /** Same index, fresher per-list stats. */
+  def withListSizes(s: Option[Array[Long]]): IvfIndex
+
+  /** Same quantizers, new lists (and no list stats). `docs` (id, vector)
+    * is the exact re-rank source, read only by models that re-rank.
+    */
+  def withLists(lists: DataFrame, docs: => DataFrame): IvfIndex
+
+  /** Assign (and encode) `(id, vector, keepCols...)` rows with the trained
+    * quantizers — no retraining — into list rows carrying `keepCols`.
+    */
+  def encodeDelta(delta: DataFrame, keepCols: Seq[String]): DataFrame
+
+  /** Persist the trained quantizers under `root`; the lists are the
+    * caller's to write.
+    */
+  def saveQuantizers(root: String): Unit
+}
+
 object AnnIndex {
   import org.apache.spark.sql.functions.{col, lit}
 

@@ -36,15 +36,25 @@ class BinaryIvfIndex(
     val codeCol: String,
     val centroids: Array[Array[Byte]],
     val params: IndexParams,
-    // per-list row counts (index position = centroid_id), a build-time
-    // upper bound feeding adaptive probe widening; None = fixed nprobe
-    val listSizes: Option[Array[Long]] = None) extends AnnIndex {
+    val listSizes: Option[Array[Long]] = None) extends IvfIndex {
 
   def retrievalType: String = "BINARYIVF"
+  override def lists: DataFrame = data
+  override def ncentroids: Int = centroids.length
+  override def compressed: Boolean = true
 
-  /** Same index, fresher per-list stats. */
-  def withListSizes(s: Option[Array[Long]]): BinaryIvfIndex =
+  override def withListSizes(s: Option[Array[Long]]): BinaryIvfIndex =
     new BinaryIvfIndex(spark, data, idCol, codeCol, centroids, params, s)
+
+  override def withLists(lists: DataFrame, docs: => DataFrame): BinaryIvfIndex =
+    new BinaryIvfIndex(spark, lists, idCol, codeCol, centroids, params)
+
+  override def encodeDelta(delta: DataFrame, keepCols: Seq[String]): DataFrame =
+    BinaryIvfIndex.assignWithCenters(
+      delta.select((col(idCol) +: col(codeCol) +: keepCols.map(col)): _*), codeCol, centroids)
+
+  override def saveQuantizers(root: String): Unit =
+    BinaryIvfIndex.saveCenters(spark, s"$root/centroids_bin", centroids)
 
   private def probes(q: Array[Byte], nprobe: Int, k: Int): Seq[Int] = {
     val ranked = centroids.zipWithIndex

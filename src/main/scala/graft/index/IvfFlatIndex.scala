@@ -261,17 +261,25 @@ class IvfFlatIndex(
     val vecCol: String,
     val centers: Array[Array[Double]],
     val params: IndexParams,
-    // per-list row counts (index position = centroid_id), a build-time
-    // upper bound feeding adaptive probe widening; None = fixed nprobe
-    val listSizes: Option[Array[Long]] = None) extends AnnIndex {
+    val listSizes: Option[Array[Long]] = None) extends IvfIndex {
 
   override def retrievalType: String = "IVFFLAT"
+  override def lists: DataFrame = data
+  override def ncentroids: Int = centers.length
+  override def compressed: Boolean = false
 
-  /** Same index, fresher per-list stats (the incremental indexer caches
-    * them per lists version).
-    */
-  def withListSizes(s: Option[Array[Long]]): IvfFlatIndex =
+  override def withListSizes(s: Option[Array[Long]]): IvfFlatIndex =
     new IvfFlatIndex(spark, data, idCol, vecCol, centers, params, s)
+
+  override def withLists(lists: DataFrame, docs: => DataFrame): IvfFlatIndex =
+    new IvfFlatIndex(spark, lists, idCol, vecCol, centers, params)
+
+  override def encodeDelta(delta: DataFrame, keepCols: Seq[String]): DataFrame =
+    Ivf.assignWithCenters(delta.select((col(idCol) +: col(vecCol) +: keepCols.map(col)): _*),
+      vecCol, centers, params.metric)
+
+  override def saveQuantizers(root: String): Unit =
+    Ivf.saveCenters(spark, s"$root/centroids", centers)
 
   override def search(
       queries: Seq[(Long, Array[Float])],
@@ -321,7 +329,7 @@ class IvfFlatIndex(
     */
   def save(path: String): Unit = {
     data.write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/lists")
-    Ivf.saveCenters(spark, s"$path/centroids", centers)
+    saveQuantizers(path)
   }
 }
 

@@ -30,26 +30,19 @@ class IvfPqIndex(
     val codebooks: Array[Array[Array[Double]]], // [m][ksub][dsub]
     val params: IndexParams,
     val rotation: Option[Array[Array[Double]]] = None,
-    // per-list code counts (index position = centroid_id), a build-time
-    // upper bound feeding adaptive probe widening; None = fixed nprobe
-    val listSizes: Option[Array[Long]] = None) extends AnnIndex {
+    val listSizes: Option[Array[Long]] = None) extends IvfIndex {
 
   override def retrievalType: String = "IVFPQ"
+  override def lists: DataFrame = codes
+  override def ncentroids: Int = centers.length
+  override def compressed: Boolean = true
 
-  /** Rows actually read by the LAST search's ADC scan — filled by a
-    * LongAccumulator once the caller runs an action on the returned frame
-    * (-1 before any search). Feedback surface for the indexer's probe-cost
-    * bound: the uniform-volume row prediction is calibrated against this
-    * (IncrementalIndexer.rowCalibration).
-    */
-  @transient @volatile private[graft] var lastScanAcc
-      : Option[org.apache.spark.util.LongAccumulator] = None
-  def lastScannedRows: Long = lastScanAcc.map(_.value.longValue).getOrElse(-1L)
-
-  /** Same index, fresher per-list stats. */
-  def withListSizes(s: Option[Array[Long]]): IvfPqIndex =
+  override def withListSizes(s: Option[Array[Long]]): IvfPqIndex =
     new IvfPqIndex(spark, codes, rawDocs, idCol, vecCol, centers, codebooks,
       params, rotation, s)
+
+  override def withLists(lists: DataFrame, docs: => DataFrame): IvfPqIndex =
+    new IvfPqIndex(spark, lists, docs, idCol, vecCol, centers, codebooks, params, rotation)
 
   // The ADC LUT is exact for L2 and InnerProduct; the reference's kernels
   // implement exactly those two (index/retrieval_model.h:20 declares Cosine
@@ -120,8 +113,8 @@ class IvfPqIndex(
       in.schema(idCol).copy(name = "id"),
       org.apache.spark.sql.types.StructField("score",
         org.apache.spark.sql.types.DoubleType, nullable = false)))
+    // code rows the ADC scan reads, named so Spark listeners can total it
     val scanAcc = spark.sparkContext.longAccumulator("graft.ivfpq.scannedRows")
-    lastScanAcc = Some(scanAcc)
     val adc = in.mapPartitions { rows =>
       val (cs, cbs) = bcQuant.value
       var curCid = Integer.MIN_VALUE
@@ -180,7 +173,7 @@ class IvfPqIndex(
     * One kernel pass, no retraining. `keepCols` are carried through
     * (e.g. a version stamp).
     */
-  def encodeDelta(delta: DataFrame, keepCols: Seq[String] = Nil): DataFrame =
+  override def encodeDelta(delta: DataFrame, keepCols: Seq[String]): DataFrame =
     IvfPqIndex.encodeAll(delta, idCol, vecCol, centers, codebooks, rotation, keepCols,
       params.metric)
 
@@ -202,7 +195,7 @@ class IvfPqIndex(
     * OPQ rotation) — for callers that manage the code lists themselves
     * (the persisted incremental indexer).
     */
-  def saveQuantizers(path: String): Unit = {
+  override def saveQuantizers(path: String): Unit = {
     import spark.implicits._
     Ivf.saveCenters(spark, s"$path/centroids", centers)
     codebooks.zipWithIndex.flatMap { case (cb, j) =>

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.{broadcast, col}
 
 import graft.core.Metric
 import graft.functions.{CosineSimilarity, InnerProduct, L2SqDistance}
-import graft.index.AnnIndex
+import graft.index.{AnnIndex, FilteredAnn, IvfIndex}
 
 /** Catalyst rewrite of exact-KNN plans into the ANN index path — the
   * optimizer half of the reference's planner behavior where an available
@@ -249,16 +249,10 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     } yield plan
   }
 
-  /** The filtered-ANN policy on the SQL surface — same tiers and confs as
-    * `IncrementalIndexer.search`: a SELECTIVE filter keeps the ORIGINAL
-    * exact plan (partial probing could return fewer than k even though
-    * matches exist, and the exact plan is cheap over few survivors —
-    * returning None here IS the exact fallback); a moderate one pushes the
-    * surviving id set with a broadcast hint and widens the probe budget by
-    * inverse selectivity; a weakly selective one pushes unhinted so the
-    * semi-join shuffles instead of forcing a near-table-size set through
-    * the driver — and for HNSW, whose pushdown materializes the set
-    * driver-side, the filter moves AFTER the scan with a widened fetch.
+  /** The filtered-ANN policy ([[FilteredAnn.decide]], shared with
+    * `IncrementalIndexer.search`) on the SQL surface: its exact decision
+    * keeps the ORIGINAL exact plan — returning None here IS the exact
+    * fallback; a probe decision replaces the plan with the index search.
     */
   private def buildReplacement(
       ri: RegisteredIndex,
@@ -283,49 +277,25 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val flt = ri.docs.filter(c).select(col(ri.idCol)).localCheckpoint(true)
       (flt, ri.docs.count(), flt.count())
     }
-    // same cost-based bound as IncrementalIndexer.search: an explicit conf
-    // is absolute; otherwise a probe cheaper to answer exactly (using the
-    // index's own per-list stats when attached) declines the rewrite
-    val exactThreshold = conf.getConfString("spark.graft.filter.exactFallbackRows", "")
-      match {
-        case "" =>
-          val probeCost = stats.map { case (_, total, aCnt) =>
-            val sizes = ri.index match {
-              case f: graft.index.IvfFlatIndex   => f.listSizes
-              case p: graft.index.IvfPqIndex     => p.listSizes
-              case b: graft.index.BinaryIvfIndex => b.listSizes
-              case _                             => None
-            }
-            graft.streaming.IncrementalIndexer.probeCostRows(
-              ri.index, math.max(total, 1L), aCnt, None, sizes)
-          }.getOrElse(0L)
-          math.max(math.max(16L * k, 65536L), probeCost)
-        case s => s.toLong
-      }
-    val broadcastMax = conf.getConfString("spark.graft.filter.broadcastMaxKeys",
-      "1000000").toLong
-    if (stats.exists(_._3 <= exactThreshold)) return None
-    val hnswHuge = ri.index.retrievalType == "HNSW" && stats.exists(_._3 > broadcastMax)
-    val (probe, fetchK) = stats match {
-      case Some((_, total, aCnt)) if aCnt > 0 =>
-        val base = if (ri.index.retrievalType == "HNSW") ri.index.params.efSearch
-                   else ri.index.params.nprobe
-        val factor = math.max(1L, (total + aCnt - 1L) / aCnt)
-        val f =
-          if (hnswHuge)
-            math.min(k.toLong * factor * 2L, math.max(k.toLong, 1L << 16)).toInt
-          else k
-        (Some(math.min(base.toLong * factor, 1L << 20).toInt), f)
-      case _ => (None, k)
+    val listSizes = ri.index match {
+      case l: IvfIndex => l.listSizes
+      case _           => None
     }
-    val allowed = stats.map { case (flt, _, aCnt) =>
-      if (aCnt <= broadcastMax) broadcast(flt) else flt
+    val decision = FilteredAnn.decide(Some(ri.index),
+      stats.map(s => math.max(s._2, 1L)).getOrElse(1L), stats.map(_._3).getOrElse(-1L),
+      k, None, listSizes, FilteredAnn.Conf.from(key => Option(conf.getConfString(key, null))))
+    val probe = decision match {
+      case p: FilteredAnn.Probe => p
+      case _: FilteredAnn.Exact => return None
     }
-    val push = if (hnswHuge) None else allowed
-    val hits0 = ri.index.search(Seq((0L, qvec)), fetchK, probe, allowedIds = push)
+    val allowed = stats.map { case (flt, _, _) =>
+      if (probe.broadcastAllowed) broadcast(flt) else flt
+    }
+    val push = if (probe.semiJoinAfter) None else allowed
+    val hits0 = ri.index.search(Seq((0L, qvec)), probe.fetchK, probe.nprobe, allowedIds = push)
       .select(col("id"), col("score"))
     val hits =
-      if (hnswHuge)
+      if (probe.semiJoinAfter)
         hits0.join(
           stats.get._1.select(col(ri.idCol).cast("long").as("id")),
           Seq("id"), "left_semi")

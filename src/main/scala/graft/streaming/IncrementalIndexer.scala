@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
-import graft.index.{AnnIndex, BinaryIvfIndex, HnswIndex, IndexParams, Ivf, IvfFlatIndex, IvfPqIndex}
+import graft.index.{AnnIndex, BinaryIvfIndex, FilteredAnn, HnswIndex, IndexParams, Ivf,
+  IvfFlatIndex, IvfIndex, IvfPqIndex}
 import graft.operators.{Knn, TopK}
 import graft.table.GammaTable
 
@@ -116,30 +117,12 @@ class IncrementalIndexer(
   def status: String = table.meta.indexStatus
   def currentIndex: Option[AnnIndex] = index
 
-  /** Same quantizers, different code lists — used by the stale-filter,
-    * refresh, compaction, and load paths. The IVFPQ re-rank source is the
-    * CURRENT doc table, so re-ranked scores always reflect live vectors.
+  /** Same quantizers, different lists — used by the build, refresh,
+    * compaction and search paths. The re-rank source is the CURRENT doc
+    * table, so re-ranked scores always reflect live vectors.
     */
-  private def rebuilt(proto: AnnIndex, data: DataFrame): AnnIndex = proto match {
-    case f: IvfFlatIndex =>
-      new IvfFlatIndex(spark, data, key, vecCol, f.centers, params)
-    case p: IvfPqIndex =>
-      new IvfPqIndex(spark, data, table.docs.select(col(key), col(vecCol)),
-        key, vecCol, p.centers, p.codebooks, p.params, p.rotation)
-    case h: HnswIndex =>
-      new HnswIndex(spark, data, key, vecCol, params, h.excluded)
-    case b: BinaryIvfIndex =>
-      new BinaryIvfIndex(spark, data, key, vecCol, b.centroids, b.params)
-    case other => other
-  }
-
-  private def listsOf(idx: AnnIndex): DataFrame = idx match {
-    case f: IvfFlatIndex   => f.data
-    case p: IvfPqIndex     => p.codes
-    case h: HnswIndex      => h.graphs
-    case b: BinaryIvfIndex => b.data
-    case other => throw new IllegalStateException(s"unsupported ${other.retrievalType}")
-  }
+  private def relisted(idx: IvfIndex, lists: DataFrame): IvfIndex =
+    idx.withLists(lists, table.docs.select(col(key), col(vecCol)))
 
   // per-list row counts for adaptive probe widening, cached per
   // (listsVersion, builtVersion): ONE column-pruned count job when the
@@ -154,7 +137,8 @@ class IncrementalIndexer(
     */
   @volatile private[graft] var lastProbeBase: Int = -1
 
-  private def cachedListSizes(lists: DataFrame, ncent: Int): Option[Array[Long]] = {
+  private def cachedListSizes(idx: IvfIndex): Option[Array[Long]] = {
+    val ncent = idx.ncentroids
     if (!Ivf.adaptiveEnabled(spark) || ncent <= 0) return None
     val cur = sizesCache
     if (cur._1 == listsVersion && cur._2 == builtVersion) cur._3
@@ -162,7 +146,7 @@ class IncrementalIndexer(
       val arr = new Array[Long](ncent)
       // cast: the centroid_id of persisted lists is a parquet PARTITION
       // column, whose inferred type need not match the written IntegerType
-      lists.groupBy(col("centroid_id").cast("int").as("centroid_id")).count()
+      idx.lists.groupBy(col("centroid_id").cast("int").as("centroid_id")).count()
         .collect().foreach { r =>
           val c = r.getInt(0)
           if (c >= 0 && c < ncent) arr(c) = r.getLong(1)
@@ -177,35 +161,6 @@ class IncrementalIndexer(
   // query batch's deserialize cost), then every search sizes its
   // per-segment beam from the cached scalar
   @volatile private var hnswAvgCache: (Long, Long, Option[Double]) = (-2L, -2L, None)
-
-  /** Probe-cost feedback: (predicted scanned rows, the searched IVFPQ
-    * instance whose accumulator fills when the caller runs an action).
-    * Folded into [[rowCalibration]] at the NEXT search. Only unfiltered
-    * probes register — an allowed-set semi-join shrinks the measured scan
-    * by the filter's selectivity, which would mis-teach the volume model.
-    */
-  @volatile private var pendingFeedback: Option[(Long, IvfPqIndex)] = None
-
-  /** Guards the [[pendingFeedback]] -> [[rowCalibration]] read-modify-
-    * write: concurrent searches doing the unsynchronized fold could lose
-    * an EWMA update or fold one measurement twice. Reads of the volatile
-    * scalar stay lock-free.
-    */
-  private val calibLock = new Object
-
-  /** EWMA of measured/predicted scanned rows (clamped to [0.01, 100]) —
-    * corrects the uniform-volume probe-cost model under list skew.
-    * Accumulator counts include any re-executed tasks (Spark only
-    * de-duplicates accumulators inside actions), which at worst nudges the
-    * bound conservative — the safe direction.
-    */
-  @volatile private[graft] var rowCalibration: Double = 1.0
-
-  /** Scanned-row count measured for the last feedback-registered probe
-    * (-1 until the caller has materialized that search's result).
-    */
-  def lastMeasuredScanRows: Long =
-    pendingFeedback.map(_._2.lastScannedRows).getOrElse(-1L)
 
   private def cachedSegmentAvg(graphs: DataFrame): Option[Double] = {
     if (!HnswIndex.adaptiveEfEnabled(spark)) return None
@@ -225,17 +180,6 @@ class IncrementalIndexer(
       hnswAvgCache = (listsVersion, builtVersion, avg)
       avg
     }
-  }
-
-  /** Attach the cached per-list stats to an IVF-family instance (graph
-    * models size their per-segment beam instead; FLAT probes nothing).
-    */
-  private def withListStats(idx: AnnIndex): AnnIndex = idx match {
-    case f: IvfFlatIndex   => f.withListSizes(cachedListSizes(f.data, f.centers.length))
-    case p: IvfPqIndex     => p.withListSizes(cachedListSizes(p.codes, p.centers.length))
-    case b: BinaryIvfIndex => b.withListSizes(cachedListSizes(b.data, b.centroids.length))
-    case h: HnswIndex      => h.withSegmentAvg(cachedSegmentAvg(h.graphs))
-    case other => other
   }
 
   private def fs = new Path(indexRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -300,9 +244,6 @@ class IncrementalIndexer(
     }
   }
 
-  private def saveCentroids(centers: Array[Array[Double]]): Unit =
-    Ivf.saveCenters(spark, s"$indexRoot/centroids", centers)
-
   /** Build or incrementally extend the index (R5/R6). Call after each
     * ingest microbatch (the streaming wrapper does).
     */
@@ -323,62 +264,56 @@ class IncrementalIndexer(
         // INDEXING
         if (table.meta.maxDocid >= indexingSize && !docs.isEmpty) {
           table.setIndexStatus("INDEXING")
-          val proto: AnnIndex = retrievalType.toUpperCase(java.util.Locale.ROOT) match {
+          // explicit ncentroids skips the count job (it only feeds auto sizing)
+          def ncent =
+            if (params.ncentroids > 0) params.ncentroids
+            else Ivf.autoNcentroids(docs.count(), -1)
+          // (model, its version-stamped lists)
+          val (proto, assigned) = retrievalType.toUpperCase(java.util.Locale.ROOT) match {
             case "IVFPQ" =>
-              // train quantizers on the current docs, then stamp the code
-              // lists with row versions via the delta-encode kernel
-              IvfPqIndex.build(spark, live, key, vecCol, params)
-            case "HNSW" =>
-              HnswIndex.build(spark, live.select(col(key), col(vecCol)),
-                key, vecCol, params)
-            case "BINARYIVF" =>
-              val k =
-                if (params.ncentroids > 0) params.ncentroids
-                else Ivf.autoNcentroids(docs.count(), -1)
-              val centers = BinaryIvfIndex.trainCoarse(
-                docs, vecCol, k, params.trainSampleRows, params.seed)
-              new BinaryIvfIndex(spark,
-                BinaryIvfIndex.assignWithCenters(docs, vecCol, centers),
-                key, vecCol, centers, params)
-            case _ =>
-              val k =
-                if (params.ncentroids > 0) params.ncentroids
-                else Ivf.autoNcentroids(docs.count(), -1)
-              val centers = Ivf.trainCoarse(docs, vecCol, k, params.trainSampleRows, params.seed)
-              new IvfFlatIndex(spark,
-                Ivf.assignWithCenters(docs, vecCol, centers, params.metric),
-                key, vecCol, centers, params)
-          }
-          val assigned = proto match {
-            case p: IvfPqIndex =>
               // build already encoded every doc — just stamp row versions
               // instead of paying a second full-table encode pass
-              p.codes.join(docs.select(col(key), col(IxvCol)), Seq(key))
-            case f: IvfFlatIndex   => f.data
-            case h: HnswIndex      => h.graphs
-            case b: BinaryIvfIndex => b.data
-            case other => throw new IllegalStateException(other.retrievalType)
+              val p = IvfPqIndex.build(spark, live, key, vecCol, params)
+              (p, p.codes.join(docs.select(col(key), col(IxvCol)), Seq(key)))
+            case "HNSW" =>
+              val h = HnswIndex.build(spark, live.select(col(key), col(vecCol)),
+                key, vecCol, params)
+              (h, h.graphs)
+            case "BINARYIVF" =>
+              val centers = BinaryIvfIndex.trainCoarse(
+                docs, vecCol, ncent, params.trainSampleRows, params.seed)
+              val b = new BinaryIvfIndex(spark,
+                BinaryIvfIndex.assignWithCenters(docs, vecCol, centers),
+                key, vecCol, centers, params)
+              (b, b.data)
+            case _ =>
+              val centers =
+                Ivf.trainCoarse(docs, vecCol, ncent, params.trainSampleRows, params.seed)
+              val f = new IvfFlatIndex(spark,
+                Ivf.assignWithCenters(docs, vecCol, centers, params.metric),
+                key, vecCol, centers, params)
+              (f, f.data)
           }
           val data =
             if (persist) {
               writeLists(assigned, listsPath, SaveMode.Overwrite)
               proto match {
-                case p: IvfPqIndex   => p.saveQuantizers(indexRoot)
-                case f: IvfFlatIndex => saveCentroids(f.centers)
-                case b: BinaryIvfIndex =>
-                  BinaryIvfIndex.saveCenters(spark, s"$indexRoot/centroids_bin", b.centroids)
-                case _               => ()
+                case l: IvfIndex => l.saveQuantizers(indexRoot)
+                case _           => ()
               }
               persistedData()
             } else assigned.localCheckpoint(true)
-          index = Some(rebuilt(proto, data))
+          index = Some(proto match {
+            case _: HnswIndex => new HnswIndex(spark, data, key, vecCol, params)
+            case l: IvfIndex  => relisted(l, data)
+          })
           builtVersion = targetVersion
           cleanedVersion = builtVersion // fresh lists: only live docs
           if (persist) writeMeta()
           table.setIndexStatus("INDEXED")
         }
       case Some(h: HnswIndex) => refreshHnsw(h)
-      case Some(idx) =>
+      case Some(idx: IvfIndex) =>
         // capture the horizon BEFORE evaluating the delta, and bound the
         // delta BY it: rows committed mid-refresh land above targetVersion
         // and are picked up exactly once next refresh (unbounded, they
@@ -392,14 +327,7 @@ class IncrementalIndexer(
           .select(col(key), col(vecCol), col(VersionCol).as(IxvCol))
         if (!delta.isEmpty) {
           // encode with the EXISTING quantizers — no retrain (R5/R6)
-          val assigned = idx match {
-            case p: IvfPqIndex => p.encodeDelta(delta, keepCols = Seq(IxvCol))
-            case f: IvfFlatIndex =>
-              Ivf.assignWithCenters(delta, vecCol, f.centers, f.params.metric)
-            case b: BinaryIvfIndex =>
-              BinaryIvfIndex.assignWithCenters(delta, vecCol, b.centroids)
-            case other => throw new IllegalStateException(other.retrievalType)
-          }
+          val assigned = idx.encodeDelta(delta, keepCols = Seq(IxvCol))
           val newData =
             if (persist) {
               // supersede log FIRST: a crash between the two writes then
@@ -411,14 +339,15 @@ class IncrementalIndexer(
               writeLists(assigned, listsPath, SaveMode.Append)
               persistedData()
             } else
-              listsOf(idx)
+              idx.lists
                 .join(delta.select(key), Seq(key), "left_anti") // R6: replace updated
                 .unionByName(assigned)
                 .localCheckpoint(true)
-          index = Some(rebuilt(idx, newData))
+          index = Some(relisted(idx, newData))
         }
         builtVersion = targetVersion
         if (persist) writeMeta()
+      case Some(other) => throw new IllegalStateException(s"unsupported ${other.retrievalType}")
     }
   }
 
@@ -580,7 +509,7 @@ class IncrementalIndexer(
         val excl = h.excluded.map(_.toDF(key).unionByName(purged.toDF(key)))
           .getOrElse(purged.toDF(key)).distinct().localCheckpoint(true)
         index = Some(new HnswIndex(spark, h.graphs, key, vecCol, params, Some(excl)))
-      case idx if persist =>
+      case idx: IvfIndex if persist =>
         // persisted lists: supersede every CURRENT entry of the purged keys
         // via the replaced log — O(churn) append, not an O(index) rewrite
         // (entries stamped _ixv <= the current table version are hidden; a
@@ -593,11 +522,11 @@ class IncrementalIndexer(
         // (listsVersion, builtVersion) key — drop the cached per-list
         // sizes or probe costing/widening keeps pricing purged rows
         sizesCache = (-2L, -2L, None)
-        index = Some(rebuilt(idx, persistedData()))
-      case idx =>
+        index = Some(relisted(idx, persistedData()))
+      case idx: IvfIndex =>
         // resident lists: drop the purged keys' entries — O(churn) anti-join
         sizesCache = (-2L, -2L, None)
-        index = Some(rebuilt(idx, listsOf(idx)
+        index = Some(relisted(idx, idx.lists
           .join(purged.toDF(key), Seq(key), "left_anti").localCheckpoint(true)))
     }
   }
@@ -612,7 +541,7 @@ class IncrementalIndexer(
         // graph compaction IS a rebuild: entries cannot be removed from an
         // immutable graph segment, so rewrite the graphs from live docs
         rebuildHnsw()
-      case idx =>
+      case idx: IvfIndex =>
         // drop superseded rows (the log) AND rows of keys no longer live
         // (the reference compacts buckets when the deleted ratio grows,
         // realtime_mem_data.cc:98-142). Dropping rows of keys updated but
@@ -631,7 +560,7 @@ class IncrementalIndexer(
         writeMeta()
         sweepRetired()
         retire(s"$indexRoot/lists/v$old", s"$indexRoot/replaced/v$old")
-        index = Some(rebuilt(idx, persistedData()))
+        index = Some(relisted(idx, persistedData()))
     }
   }
 
@@ -642,24 +571,11 @@ class IncrementalIndexer(
     * `IsSimilarScoreValid` callback) so out-of-range hits never consume
     * the candidate budget.
     *
-    * Filtered-ANN policy (SURVEY §7.5 risk 2 — the reference pushes
-    * `IsValid` into the scan and over-fetches via `recall_num`,
-    * gamma_index_ivfpq.h:584,633; and falls back to brute force when the
-    * filter leaves too few docs, gamma_engine.cc:327-340). An allowed set
-    * is classified by size (`allowedCount`; counted here when the caller
-    * did not already know it):
-    *  - **few survivors** (≤ max(16·k, `spark.graft.filter.exactFallbackRows`)):
-    *    partial-nprobe probing could return fewer than k (or worse)
-    *    results even though matches exist — serve EXACTLY over the
-    *    filtered rows instead (V9 semantics), which is both correct and
-    *    cheaper than probing;
-    *  - **moderate** (≤ `spark.graft.filter.broadcastMaxKeys`): push into
-    *    the index scan with a broadcast hint, and WIDEN nprobe/ef by the
-    *    inverse selectivity (capped by the model's own clamp) so the
-    *    probed lists still hold ~k allowed docs;
-    *  - **huge** (weakly selective): same pushdown but NO broadcast hint —
-    *    the semi-join shuffles (or AQE re-plans it), instead of forcing a
-    *    near-table-size set through the driver.
+    * Whether a filtered search is served exactly over the survivors or by
+    * a widened index probe is [[graft.index.FilteredAnn.decide]]'s call,
+    * priced with the index's cached per-list sizes. `allowedCount` sizes
+    * the allowed set; it is counted here when the caller did not already
+    * know it.
     */
   def search(
       queries: Seq[(Long, Array[Float])],
@@ -673,28 +589,6 @@ class IncrementalIndexer(
       hasRank: Option[Boolean] = None): DataFrame = {
     import spark.implicits._
     graft.functions.registerAll(spark)
-    // fold in the PREVIOUS search's measured scan (its accumulator filled
-    // when the caller ran an action on the returned frame): EWMA of
-    // measured/predicted scanned rows corrects the uniform-volume model
-    // under list skew the cached stats have not caught up with
-    calibLock.synchronized {
-      pendingFeedback.foreach { case (pred, pq) =>
-        // clamp to the index's total rows: a caller that materialized the
-        // frame more than once re-ran the scan into the SAME accumulator
-        // (Spark only de-duplicates inside one action; task retries and
-        // speculative duplicates inflate it the same way — accumulators in
-        // transformations are best-effort), and a probe can never truly
-        // read more than the whole code table — the clamp bounds that
-        // inflation at "full scan", the conservative direction, and the
-        // EWMA washes residual skew out over subsequent clean searches
-        val m = math.min(pq.lastScannedRows, math.max(table.meta.maxDocid, 1L))
-        if (m > 0 && pred > 0) {
-          rowCalibration = math.max(0.01, math.min(100.0,
-            0.5 * rowCalibration + 0.5 * (m.toDouble / pred)))
-          pendingFeedback = None
-        }
-      }
-    }
     // binary fields store packed bytes; their queries ride the float
     // surface as byte values (BinaryIvfIndex adapter) — the exact-scan
     // paths need a BinaryType query column for the hamming kernel
@@ -707,49 +601,21 @@ class IncrementalIndexer(
       case Some(ids) => if (allowedCount >= 0L) allowedCount else ids.count()
       case None      => -1L
     }
-    // an EXPLICIT conf is an absolute override (0 disables the exact
-    // fallback — e.g. to force the index path under test); the default is
-    // COST-BASED on the index's own stats: a probe reads ~total ·
-    // effNprobe/ncentroids list rows (discounted for compressed codes), so
-    // whenever the allowed set is no bigger than that, ONE exact pass over
-    // the survivors is both cheaper than probing and exact by
-    // construction. A static floor (16·k, 64k rows) covers the no-index /
-    // graph-model cases where the volume model does not apply.
-    // one model-arity/partial-probe computation shared by the cost bound
-    // below and the stats attachment in the index branch
-    def ncentOf(ix: AnnIndex): Int = ix match {
-      case f: IvfFlatIndex   => f.centers.length
-      case p: IvfPqIndex     => p.centers.length
-      case b: BinaryIvfIndex => b.centroids.length
-      case _                 => 0
+    // per-list stats only matter when the probe is PARTIAL — a full probe
+    // reads every list regardless, so skip the (cached) stats count job
+    // for it (full-probe lifecycle/oracle searches stay job-for-job
+    // identical to the pre-stats engine). Lazy: a search that prices or
+    // widens nothing never triggers the job.
+    lazy val listSizes = index match {
+      case Some(l: IvfIndex) if FilteredAnn.partialProbe(l, nprobe) => cachedListSizes(l)
+      case _ => None
     }
-    def partialListProbe(ix: AnnIndex): Boolean = {
-      val nc = ncentOf(ix)
-      nc > 0 && nprobe.getOrElse(params.nprobe) < nc
-    }
-    // lazy: only the filtered branch (aCount >= 0) consults it — an
-    // unfiltered search must not pay the probe-cost model (or the cached
-    // list-sizes job it can trigger) for a value it never reads
-    lazy val exactThreshold = spark.conf.getOption("spark.graft.filter.exactFallbackRows")
-      .map(_.toLong).getOrElse {
-        // cost from ACTUAL per-list row counts when the probe is partial
-        // (cached stat, one job per lists version — the same stats the
-        // adaptive widening reads); uniform-volume model otherwise
-        val probeCost = index.map { ix =>
-          val sizes =
-            if (partialListProbe(ix)) cachedListSizes(listsOf(ix), ncentOf(ix)) else None
-          IncrementalIndexer.probeCostRows(
-            ix, math.max(table.meta.maxDocid, 1L), aCount, nprobe, sizes,
-            rowCalibration)
-        }.getOrElse(0L)
-        math.max(math.max(16L * k, 65536L), probeCost)
-      }
-    val broadcastMax = spark.conf.getOption("spark.graft.filter.broadcastMaxKeys")
-      .map(_.toLong).getOrElse(1000000L)
+    // maxDocid is a free upper bound on table size (deletes only make it
+    // conservative)
+    val decision = FilteredAnn.decide(index, math.max(table.meta.maxDocid, 1L), aCount, k,
+      nprobe, listSizes, FilteredAnn.Conf.from(spark.conf.getOption))
     val allowedHinted = allowedIds.map { ids =>
-      if (aCount <= broadcastMax)
-        org.apache.spark.sql.functions.broadcast(ids.toDF(key))
-      else ids.toDF(key)
+      if (decision.broadcastAllowed) broadcast(ids.toDF(key)) else ids.toDF(key)
     }
     def restrict(df: DataFrame): DataFrame = allowedHinted match {
       case Some(ids) => df.join(ids, Seq(key), "left_semi")
@@ -761,21 +627,9 @@ class IncrementalIndexer(
     // so the 2M-vector evidence must show the decision, not just the result)
     def logTier(t: String): Unit = System.err.println(
       s"[tier] filtered-ann=$t allowed=$aCount" +
-        (if (aCount >= 0L) s" exactThreshold=$exactThreshold" else ""))
-    index match {
-      case None =>
-        // V9: brute force while UNINDEXED
-        logTier("unindexed-brute")
-        Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
-          minScore = minScore, maxScore = maxScore)
-      case Some(_) if aCount >= 0L && aCount <= exactThreshold =>
-        // exact-over-filtered fallback: few enough survivors that probing
-        // cannot guarantee k of them — and scoring all of them exactly is
-        // cheaper than a probe anyway
-        logTier("exact-fallback")
-        Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
-          minScore = minScore, maxScore = maxScore)
-      case Some(idx) =>
+        (if (aCount >= 0L) s" exactThreshold=${decision.exactThreshold}" else ""))
+    (index, decision) match {
+      case (Some(idx), probe: FilteredAnn.Probe) =>
         // ids whose index entry is stale (updated after build) or dead —
         // such rows only live in buckets rewritten since the horizon, so
         // the scan is O(churned buckets), not O(table). (Keys whose
@@ -783,28 +637,20 @@ class IncrementalIndexer(
         val invalid = table.docsChangedSince(invalidHorizon)
           .filter(col(VersionCol) > builtVersion || col(DeletedCol))
           .select(col(key))
-        // per-list stats only matter when the probe is PARTIAL — a full
-        // probe reads every list regardless, so skip the (cached) stats
-        // count job for it (full-probe lifecycle/oracle searches stay
-        // job-for-job identical to the pre-stats engine)
-        val partialProbe = partialListProbe(idx) ||
-          // a graph walk is always "partial" — per-segment beam stats apply
-          retrievalType.equalsIgnoreCase("HNSW")
-        // ONE shared exclusion surface (AnnIndex.excluding, X2/T11): list
-        // models anti-join their lists, HNSW folds into its standing
-        // excluded set (graph segments are opaque — exclusion happens at
-        // result admission). rebuilt() first so the IVFPQ re-rank source
-        // re-binds the CURRENT doc table.
-        val freshIdx = rebuilt(idx, listsOf(idx))
-        val statsIdx = if (partialProbe) withListStats(freshIdx) else freshIdx
+        // attach the cached stats: a graph walk sizes its per-segment
+        // beam, list models widen by list size. relisted() re-binds the
+        // IVFPQ re-rank source to the CURRENT doc table.
+        val statsIdx: AnnIndex = idx match {
+          case h: HnswIndex => h.withSegmentAvg(cachedSegmentAvg(h.graphs))
+          case l: IvfIndex  => relisted(l, l.lists).withListSizes(listSizes)
+        }
         // the request's PRE-widening probe base (override or configured
         // default) — stamped into the params copy below so the model's
         // probeTarget computes its widening ratio against the true base:
         // against the configured default, an override BELOW it floored
         // the ratio to 1 and the adaptive row target never widened with
         // the filter (starving the candidate heap on skewed lists)
-        val baseNp = nprobe.getOrElse(
-          if (retrievalType.equalsIgnoreCase("HNSW")) params.efSearch else params.nprobe)
+        val baseNp = FilteredAnn.probeBase(idx, nprobe)
         // per-request recall_num / has_rank override (X1 per-request param
         // JSON): a params copy shares quantizers/lists — no rebuild cost
         val tunedIdx =
@@ -816,57 +662,22 @@ class IncrementalIndexer(
             recallNum = recallNum.getOrElse(statsIdx.params.recallNum),
             hasRank = hasRank.getOrElse(statsIdx.params.hasRank)))
         lastProbeBase = tunedIdx.params.nprobe
+        // ONE shared exclusion surface (AnnIndex.excluding, X2/T11): list
+        // models anti-join their lists, HNSW folds into its standing
+        // excluded set (graph segments are opaque — exclusion happens at
+        // result admission)
         val cleanIdx = tunedIdx.excluding(invalid)
-        // inverse-selectivity widening: with an allowed fraction of s, a
-        // probed list holds ~s of its usual share of allowed docs, so the
-        // probe budget grows by ~1/s to keep ~k allowed candidates in
-        // range (the reference's recall_num over-fetch). maxDocid is a
-        // free upper bound on table size (deletes only make it
-        // conservative); each model clamps to its own limit (ncentroids /
-        // graph size).
-        val total = math.max(table.meta.maxDocid, 1L)
-        val factor = math.max(1L, (total + aCount - 1L) / aCount)
-        val effNprobe =
-          if (aCount > 0L) Some(math.min(baseNp.toLong * factor, 1L << 20).toInt)
-          else nprobe
-        // HNSW is the one model whose allowed-set pushdown materializes the
-        // set on the DRIVER (sorted primitive array broadcast) — for a
-        // weakly selective filter that is exactly the driver-side blowup
-        // the huge tier exists to avoid. Search unrestricted with an
-        // inverse-selectivity-widened fetch instead and semi-join the hits
-        // against the allowed set afterwards (it shuffles, never collects);
-        // the final top-k merge cuts back to k.
-        val hnswHuge = retrievalType.equalsIgnoreCase("HNSW") &&
-          allowedHinted.isDefined && aCount > broadcastMax
         logTier(
-          if (hnswHuge) "hnsw-huge-semijoin"
+          if (probe.semiJoinAfter) "hnsw-huge-semijoin"
           else if (aCount >= 0L) s"indexed-widened-probe nprobe=$baseNp->${
-            effNprobe.getOrElse(baseNp)}"
+            probe.nprobe.getOrElse(baseNp)}"
           else "indexed-unfiltered")
-        val (pushIds, fetchK) =
-          if (hnswHuge)
-            (None, math.min(k.toLong * factor * 2L, math.max(k.toLong, 1L << 16)).toInt)
-          else (allowedHinted, k)
-        val fromIndex0 = cleanIdx.search(queries, fetchK, effNprobe, pushIds, minScore, maxScore)
-        cleanIdx match {
-          case pq: IvfPqIndex if pushIds.isEmpty && queries.size == 1 =>
-            // single-query probes only: the accumulator measures the UNION
-            // of the batch's probed lists, so a req_num>1 measurement
-            // against a per-query prediction would inflate the ratio by up
-            // to the batch size (the serving point-query is the case the
-            // calibration targets anyway)
-            val effNp = math.min(
-              effNprobe.getOrElse(params.nprobe).toLong, pq.centers.length.toLong)
-            calibLock.synchronized {
-              pendingFeedback = Some((
-                IncrementalIndexer.uniformProbeRows(
-                  pq.centers.length, math.max(table.meta.maxDocid, 1L), effNp),
-                pq))
-            }
-          case _ =>
-        }
+        val fromIndex0 = cleanIdx.search(queries, probe.fetchK, probe.nprobe,
+          if (probe.semiJoinAfter) None else allowedHinted, minScore, maxScore)
         val fromIndex =
-          if (hnswHuge) {
+          if (probe.semiJoinAfter) {
+            // semi-join the hits, never collect the set (the final top-k
+            // merge cuts back to k)
             val ids = allowedIds.get
             fromIndex0.join(
               ids.select(col(ids.columns.head).cast("long").as("id")), Seq("id"), "left_semi")
@@ -877,6 +688,13 @@ class IncrementalIndexer(
           minScore = minScore, maxScore = maxScore)
         TopK.perGroup(fromIndex.unionByName(fromTail), "qid", "score",
           Metric.ascending(params.metric), k, Seq("id"))
+      case _ =>
+        // V9 brute force while UNINDEXED, or the exact-over-filtered
+        // fallback: scoring the few survivors exactly is both correct and
+        // cheaper than a probe
+        logTier(if (index.isEmpty) "unindexed-brute" else "exact-fallback")
+        Knn.flatSearch(restrict(table.docs), key, vecCol, qDf, "qid", "qvec", k, params.metric,
+          minScore = minScore, maxScore = maxScore)
     }
   }
 
@@ -888,59 +706,6 @@ object IncrementalIndexer {
     * `_version` of the doc state it encodes.
     */
   val IxvCol = "_ixv"
-
-  /** Estimated cost of a FILTERED probe through `idx`, in exact-scan row
-    * equivalents — the cost-based side of the exact-fallback decision. A
-    * probe scans ~total · effNprobe/ncentroids list rows, where effNprobe
-    * carries the inverse-selectivity widening the filtered path applies;
-    * compressed-code models (IVFPQ/BINARYIVF) read ~4x cheaper rows than
-    * the raw-vector exact scan. 0 = no model (graph/FLAT: the static
-    * floor decides alone).
-    *
-    * With `listSizes` (the cached actual per-list row counts) the volume
-    * is the sum of the effNprobe LARGEST lists instead of the uniform
-    * model: under skew — the case the uniform model misjudges — real
-    * probes are size-biased toward heavy lists, so this upper bound sends
-    * borderline requests to the exact path, which is always correct.
-    */
-  /** Uniform-volume scanned-row prediction for an eff-list probe — the
-    * quantity the accumulator feedback calibrates (scanned rows are
-    * measurable; the compressed-row cost DISCOUNT is a relative CPU cost
-    * and is not).
-    */
-  private[graft] def uniformProbeRows(ncent: Int, total: Long, eff: Long): Long =
-    if (ncent <= 0) 0L
-    else total / ncent * eff + (total % ncent) * eff / ncent // overflow-safe total*eff/ncent
-
-  private[graft] def probeCostRows(
-      idx: AnnIndex, total: Long, aCount: Long, nprobe: Option[Int],
-      listSizes: Option[Array[Long]] = None,
-      calibration: Double = 1.0): Long = {
-    if (aCount <= 0L) return 0L
-    val (ncent, compressed) = idx match {
-      case f: IvfFlatIndex   => (f.centers.length, false)
-      case p: IvfPqIndex     => (p.centers.length, true)
-      case b: BinaryIvfIndex => (b.centroids.length, true)
-      case _                 => (0, false)
-    }
-    if (ncent <= 0) return 0L
-    val base = math.max(1L, nprobe.getOrElse(idx.params.nprobe).toLong)
-    val factor = math.max(1L, (total + aCount - 1L) / aCount)
-    val eff = math.min(base * factor, ncent.toLong)
-    val rows = listSizes match {
-      case Some(sz) if sz.nonEmpty =>
-        val desc = sz.sorted(Ordering[Long].reverse)
-        var s = 0L
-        var i = 0
-        while (i < desc.length && i < eff) { s += desc(i); i += 1 }
-        s
-      case _ =>
-        // uniform model corrected by measured-feedback calibration (actual
-        // per-list row counts, when cached, need no correction)
-        (uniformProbeRows(ncent, total, eff) * calibration).toLong
-    }
-    if (compressed) rows / 4 else rows
-  }
 
   /** Persisted index manifest (the reference dumps per-model meta next to
     * its lists, gamma_engine.cc:1101-1146).

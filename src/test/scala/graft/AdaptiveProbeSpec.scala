@@ -3,15 +3,15 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
-import graft.index.{IndexParams, Ivf, IvfFlatIndex, IvfPqIndex}
+import graft.index.{FilteredAnn, HnswIndex, IndexParams, Ivf, IvfFlatIndex, IvfPqIndex}
 import graft.operators.Knn
 import graft.streaming.IncrementalIndexer
 import graft.table.GammaTable
 
 /** Adaptive probe widening (the reference scans lists until `recall_num`
   * candidates are collected, gamma_index_ivfpq.h:633-690 — re-expressed as
-  * a probe-time decision over per-list size stats) and the cost-based
-  * exact-fallback bound.
+  * a probe-time decision over per-list size stats), the cost-based
+  * exact-fallback bound and the filtered-ANN policy built on it.
   */
 class AdaptiveProbeSpec extends GraftSuite {
   import spark.implicits._
@@ -197,15 +197,15 @@ class AdaptiveProbeSpec extends GraftSuite {
     val flat = IvfFlatIndex.build(spark, docs, "vec_id", "embedding",
       IndexParams(ncentroids = 4, nprobe = 1))
     // unfiltered (aCount <= 0): the volume model does not apply
-    assert(IncrementalIndexer.probeCostRows(flat, 1000L, -1L, None) === 0L)
+    assert(FilteredAnn.probeCostRows(flat, 1000L, -1L, None) === 0L)
     // aCount 500 of 1000 -> factor 2, eff = min(1*2, 4) = 2, rows = 1000*2/4
-    assert(IncrementalIndexer.probeCostRows(flat, 1000L, 500L, None) === 500L)
+    assert(FilteredAnn.probeCostRows(flat, 1000L, 500L, None) === 500L)
     // explicit nprobe override wins over params
-    assert(IncrementalIndexer.probeCostRows(flat, 1000L, 500L, Some(2)) === 1000L)
+    assert(FilteredAnn.probeCostRows(flat, 1000L, 500L, Some(2)) === 1000L)
     // compressed-code models read ~4x cheaper rows
     val pq = IvfPqIndex.build(spark, docs, "vec_id", "embedding",
       IndexParams(ncentroids = 4, nprobe = 1, nsubvector = 2, nbits = 4))
-    assert(IncrementalIndexer.probeCostRows(pq, 1000L, 500L, None) === 125L)
+    assert(FilteredAnn.probeCostRows(pq, 1000L, 500L, None) === 125L)
   }
 
   test("probeCostRows with actual list sizes sums the largest probed lists") {
@@ -215,55 +215,102 @@ class AdaptiveProbeSpec extends GraftSuite {
     // skewed lists: uniform model says 1000*2/4 = 500 rows for eff=2, but
     // the two HEAVIEST lists hold 900 — the stats-based bound reports 900
     val sizes = Some(Array(700L, 200L, 60L, 40L))
-    assert(IncrementalIndexer.probeCostRows(flat, 1000L, 500L, None, sizes) === 900L)
+    assert(FilteredAnn.probeCostRows(flat, 1000L, 500L, None, sizes) === 900L)
     // eff capped at ncent: all four lists
-    assert(IncrementalIndexer.probeCostRows(flat, 1000L, 1L, None, sizes) === 1000L)
+    assert(FilteredAnn.probeCostRows(flat, 1000L, 1L, None, sizes) === 1000L)
     // unfiltered stays out of the volume model even with stats
-    assert(IncrementalIndexer.probeCostRows(flat, 1000L, -1L, None, sizes) === 0L)
+    assert(FilteredAnn.probeCostRows(flat, 1000L, -1L, None, sizes) === 0L)
   }
 
-  test("probeCostRows calibration scales the uniform model, not the stats branch") {
-    val docs = (0 until 64).map(i => (i.toLong, Seq(i.toFloat, 0.0f))).toDF("vec_id", "embedding")
-    val flat = IvfFlatIndex.build(spark, docs, "vec_id", "embedding",
-      IndexParams(ncentroids = 4, nprobe = 1))
-    // uniform branch: 1000*2/4 = 500 rows, x1.5 calibration = 750
-    assert(IncrementalIndexer.probeCostRows(flat, 1000L, 500L, None,
-      calibration = 1.5) === 750L)
-    // actual-size branch is measured data already — calibration must not touch it
-    val sizes = Some(Array(700L, 200L, 60L, 40L))
-    assert(IncrementalIndexer.probeCostRows(flat, 1000L, 500L, None, sizes, 1.5) === 900L)
+  // --- the filtered-ANN policy (FilteredAnn.decide, pure) ---
+
+  test("filtered-ANN policy: tier boundaries") {
+    import FilteredAnn.{Conf, Exact, Probe}
+    // no Spark work: the policy reads only the model's shape and params
+    val flat = new IvfFlatIndex(spark, spark.emptyDataFrame, "id", "vec",
+      Array.fill(4)(Array(0.0, 0.0)), IndexParams(nprobe = 1))
+    val hnsw = new HnswIndex(spark, spark.emptyDataFrame, "id", "vec",
+      IndexParams(efSearch = 64))
+    val auto = Conf(exactFallbackRows = None, broadcastMaxKeys = 1000000L, adaptiveProbe = true)
+    val forced = auto.copy(exactFallbackRows = Some(0L), broadcastMaxKeys = 70000L)
+    val skew = Some(Array(97000L, 1000L, 1000L, 1000L))
+    val light = Some(Array(40000L, 1000L, 1000L, 1000L))
+    // (case, index, total, allowed, k, nprobe, list sizes, conf, expected)
+    val cases = Seq(
+      ("unindexed is exact", None, 100000L, 5000L, 10, None, None, auto,
+        Exact(true, 65536L)),
+      // allowed 65536 of 100k: factor 2, eff 2 of 4 lists, cost 50k < floor
+      ("allowed = threshold is exact", Some(flat), 100000L, 65536L, 10, None, None, auto,
+        Exact(true, 65536L)),
+      ("threshold + 1 probes, widened by 1/selectivity", Some(flat), 100000L, 65537L, 10,
+        None, None, auto, Probe(Some(2), 10, true, false, 65536L)),
+      // the cost model outgrows the floor: factor 10 -> all 4 lists -> 1M rows
+      ("a probe dearer than the survivors is exact", Some(flat), 1000000L, 100000L, 10,
+        None, None, auto, Exact(true, 1000000L)),
+      ("explicit exactFallbackRows=0 never falls back", Some(flat), 100000L, 1L, 10,
+        None, None, forced, Probe(Some(100000), 10, true, false, 0L)),
+      ("allowed = broadcastMaxKeys broadcasts", Some(flat), 1000000L, 70000L, 10,
+        None, None, forced, Probe(Some(15), 10, true, false, 0L)),
+      ("broadcastMaxKeys + 1 drops the hint", Some(flat), 1000000L, 70001L, 10,
+        None, None, forced, Probe(Some(15), 10, false, false, 0L)),
+      ("HNSW at broadcastMaxKeys pushes the set down", Some(hnsw), 1000000L, 70000L, 10,
+        None, None, forced, Probe(Some(64 * 15), 10, true, false, 0L)),
+      // factor ceil(1M / 70001) = 15: fetchK = min(10 * 15 * 2, max(10, 65536))
+      ("HNSW above broadcastMaxKeys semi-joins after a widened fetch", Some(hnsw), 1000000L,
+        70001L, 10, None, None, forced, Probe(Some(64 * 15), 300, false, true, 0L)),
+      ("HNSW widened fetch is capped at max(k, 65536)", Some(hnsw), 1000000L, 70001L, 10000,
+        None, None, forced, Probe(Some(64 * 15), 65536, false, true, 0L)),
+      ("unfiltered never widens", Some(flat), 100000L, -1L, 10, None, skew, auto,
+        Probe(None, 10, true, false, 65536L)),
+      ("unfiltered keeps the request nprobe", Some(flat), 100000L, -1L, 10, Some(3), skew,
+        auto, Probe(Some(3), 10, true, false, 65536L)),
+      // skewed sizes price eff 2 at the two heaviest lists: 98k rows
+      ("list sizes price a partial probe", Some(flat), 100000L, 65537L, 10, None, skew, auto,
+        Exact(true, 98000L)),
+      ("adaptiveProbe=false ignores list sizes", Some(flat), 100000L, 65537L, 10, None, skew,
+        auto.copy(adaptiveProbe = false), Probe(Some(2), 10, true, false, 65536L)),
+      // a full probe reads every list: the uniform model (100k rows), not 43k
+      ("a full probe ignores list sizes", Some(flat), 100000L, 65537L, 10, Some(4), light,
+        auto, Exact(true, 100000L)))
+    cases.foreach { case (name, ix, total, allowed, k, np, sizes, conf, expected) =>
+      assert(FilteredAnn.decide(ix, total, allowed, k, np, sizes, conf) === expected, name)
+    }
   }
 
-  test("probe-cost feedback: measured scan converges the bound on skewed lists") {
-    // skewed corpus: tiny cluster at the query, heavy mass far away — the
-    // uniform model overpredicts the scan for query-side probes
-    val rows = (0 until 20).map(i => (i.toString, Seq(0f + i * 0.01f, 0f))) ++
-      (100 until 420).map(i => (i.toString, Seq(10f + (i % 7) * 0.1f, 10f + (i % 5) * 0.1f)))
-    val docs = rows.toDF("_id", "vec")
-    val root = java.nio.file.Files.createTempDirectory("graft_feedback").toString
-    val tbl = GammaTable.create(spark, root, "fb", "_id", docs,
-      Seq(graft.table.VectorFieldDef("vec", 2)), nBuckets = 4)
-    val ix = tbl.buildIndex("vec",
-      IndexParams(ncentroids = 4, nsubvector = 2, nprobe = 2, recallNum = 10),
-      retrievalType = "IVFPQ")
-    assert(ix.rowCalibration === 1.0)
-    val q = Seq((0L, Array(0f, 0f)))
-    // unfiltered partial probe registers feedback; the accumulator fills
-    // on the collect
-    ix.search(q, 5, Some(2)).collect()
-    val measured = ix.lastMeasuredScanRows
-    assert(measured > 0, "accumulator did not record the scan")
-    val total = tbl.meta.maxDocid
-    val predicted = IncrementalIndexer.uniformProbeRows(4, total, 2L)
-    assert(predicted === total / 2)
-    // skew: the query-side probes read far fewer rows than the uniform model
-    assert(measured < predicted,
-      s"expected skewed scan ($measured) below uniform prediction ($predicted)")
-    // the NEXT search folds the measurement into the EWMA
-    ix.search(q, 5, Some(2)).collect()
-    val expected = 0.5 * 1.0 + 0.5 * (measured.toDouble / predicted)
-    assert(math.abs(ix.rowCalibration - expected) < 1e-9,
-      s"rowCalibration ${ix.rowCalibration} != expected $expected")
-    assert(ix.rowCalibration < 1.0)
+  test("IVFPQ search counts scanned code rows in its named accumulator") {
+    val docs = (0 until 256).map(i => (i.toLong, Seq((i % 16).toFloat, (i / 16).toFloat)))
+      .toDF("vec_id", "embedding")
+    val idx = IvfPqIndex.build(spark, docs, "vec_id", "embedding",
+      IndexParams(ncentroids = 8, nprobe = 2, nsubvector = 2, nbits = 4))
+    val sizes = idx.codes.groupBy("centroid_id").count().as[(Int, Long)].collect().toMap
+    val queries = Seq((0L, Array(0f, 0f)), (1L, Array(15f, 15f)))
+    val probed = queries.flatMap { case (_, q) =>
+      Ivf.rankedCentroids(idx.centers, q, Metric.L2).take(2)
+    }.distinct
+    val codesInProbed = probed.map(c => sizes.getOrElse(c, 0L)).sum
+    val scanned = new java.util.concurrent.atomic.AtomicLong(0L)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        te.taskInfo.accumulables.foreach { a =>
+          if (a.name.contains("graft.ivfpq.scannedRows")) a.update.foreach {
+            case n: java.lang.Number => scanned.addAndGet(n.longValue)
+            case _                   =>
+          }
+        }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      idx.search(queries, 5).collect()
+      // the listener bus is async: wait for the first report, then settle
+      // until the total stops moving
+      var prev = -1L
+      var spins = 0
+      while ((scanned.get() == 0L || scanned.get() != prev) && spins < 50) {
+        prev = scanned.get(); Thread.sleep(100); spins += 1
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(scanned.get() > 0L, "the scan did not report its rows")
+    assert(scanned.get() <= codesInProbed,
+      s"scanned ${scanned.get()} rows, but the probed lists hold $codesInProbed codes")
   }
 }
